@@ -3,10 +3,14 @@ files the engine read; observed values are read back from what the engine
 wrote. Row sets are compared as multisets through a fingerprint
 (row count and the sum of per-row 64-bit hashes over typed columns)."""
 import glob
-import math
 import os
+import sys
 
 import duckdb
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                "tools"))
+from compare import TABLES, canon, dtype_class, normalize  # noqa: E402
 
 LINEITEM_TYPES = [
     ("l_orderkey", "BIGINT"), ("l_partkey", "BIGINT"), ("l_suppkey", "BIGINT"),
@@ -169,54 +173,6 @@ class CronTicks:
 
 
 # ---- query results, under the normalization of tools/compare.py ---------
-# Columns sorted by name, rows sorted by every column, each column's dtype
-# class equal, and every cell equal under a type-tagged serialization.
-
-def _dtype_class(dt):
-    k = dt.kind
-    return {"M": "timestamp", "i": "int", "u": "int", "f": "float", "b": "bool"}.get(k, "object")
-
-
-def _canon(v):
-    import numpy as np
-    from datetime import date, datetime
-    if v is None:
-        return "@null"
-    if isinstance(v, float):
-        return "@nan" if math.isnan(v) else "f:%r" % v
-    if isinstance(v, (bool, np.bool_)):
-        return "b:%s" % bool(v)
-    if isinstance(v, (int, np.integer)):
-        return "i:%d" % int(v)
-    if isinstance(v, np.floating):
-        return _canon(float(v))
-    if isinstance(v, (bytes, bytearray)):
-        return "x:" + bytes(v).hex()
-    if isinstance(v, str):
-        return "s:" + v
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join("%s=%s" % (k, _canon(v[k])) for k in sorted(v)) + "}"
-    if isinstance(v, datetime):
-        return "@null" if v != v else "t:" + v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, date):
-        return "d:" + v.isoformat()
-    try:
-        import pandas as pd
-        if v is pd.NaT or v is pd.NA:
-            return "@null"
-    except Exception:
-        pass
-    return "o:%s:%r" % (type(v).__name__, v)
-
-
-def _normalize(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    if len(df.columns):
-        df = df.sort_values(by=list(df.columns), kind="mergesort")
-    return df.reset_index(drop=True)
-
 
 class QueryMix:
     """Oracle results depend only on the SQL text and the fixture files, so
@@ -227,7 +183,7 @@ class QueryMix:
         self.con = con
         self.base = base
         self.cache_dir = cache_dir
-        for t in ("orders", "lineitem", "events", "documents"):
+        for t in TABLES:
             con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "
                         f"read_parquet({_q(os.path.join(base, t + '.parquet'))})")
 
@@ -239,24 +195,20 @@ class QueryMix:
         if not glob.glob(os.path.join(out_dir, "*.parquet")):
             return ["no output files"]
         dk = self._oracle(sql)
-        sp = _normalize(self.con.execute(
+        sp = normalize(self.con.execute(
             f"SELECT * FROM read_parquet({_q(os.path.join(out_dir, '*.parquet'))})").df())
         if list(dk.columns) != list(sp.columns):
             return [f"schema: oracle={list(dk.columns)} engine={list(sp.columns)}"]
         if len(dk) != len(sp):
             return [f"rows: oracle={len(dk)} engine={len(sp)}"]
         for c in dk.columns:
-            dc, sc = _dtype_class(dk[c].dtype), _dtype_class(sp[c].dtype)
+            dc, sc = dtype_class(dk[c].dtype), dtype_class(sp[c].dtype)
             if dc != sc:
                 return [f"col {c} dtype: oracle={dk[c].dtype} engine={sp[c].dtype}"]
-            dv, sv = dk[c].tolist(), sp[c].tolist()
-            if dc != "float" and dv == sv:
-                continue
-            for i, (x, y) in enumerate(zip(dv, sv)):
-                if _canon(x) != _canon(y):
-                    return [f"col {c} row {i}: oracle={_canon(x)} engine={_canon(y)}"]
+            for i, (x, y) in enumerate(zip(dk[c].tolist(), sp[c].tolist())):
+                if canon(x) != canon(y):
+                    return [f"col {c} row {i}: oracle={canon(x)} engine={canon(y)}"]
         return []
-
 
     def _oracle(self, sql):
         import hashlib
@@ -265,7 +217,7 @@ class QueryMix:
         path = os.path.join(self.cache_dir, key + ".pkl")
         if os.path.exists(path):
             return pd.read_pickle(path)
-        dk = _normalize(self.con.execute(sql).df())
+        dk = normalize(self.con.execute(sql).df())
         os.makedirs(self.cache_dir, exist_ok=True)
         dk.to_pickle(path + ".tmp")
         os.replace(path + ".tmp", path)

@@ -1,138 +1,49 @@
 """Benchmark inputs.
 
-Base tables (orders, lineitem, events, documents) are the same at every
-seed: a fixed-seed numpy stream, with the schemas and value domains the
-engine's fixture tables have. At scale factor 0.1 that is 600,000 lineitem
-rows in one parquet row group and 100,000 events over 30 days. They are written once
-per checkout and reused. Everything a workload's seed decides (which
-lineitem rows the incremental target already holds, the cron start hour,
-the query order) is derived here or in run.py from `--seed`.
+Base tables come from the repository's own fixture generator,
+tools/gen_testdata.py, which is deterministic: the same tables at every
+seed. At scale factor 0.1 that is 600,000 lineitem rows and 100,000 events
+over 30 days. They are written once per checkout (per generator version)
+and reused. Everything a workload's seed decides (which lineitem rows the
+incremental target already holds, the cron start hour, the query order) is
+derived here or in run.py from `--seed`.
 """
-import json
+import hashlib
 import os
+import shutil
+import subprocess
+import sys
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-VERSION = "v1"
-BASE_SEED = 42
-
-WORDS = ("the a spark table scan join order batch stream window dup hash "
-         "merge part small fast key sort group query row data slow filter "
-         "customer line value agg column big vector").split()
-EVENT_TYPES = np.array(["view", "click", "signup", "purchase", "error"], dtype=object)
-LANGS = np.array(["en", "de", "fr", "es", "zh"], dtype=object)
-SEGMENTS = 5
-PRIORITIES = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"],
-                      dtype=object)
-PTYPES = 6
-US = 1_000_000
-DAY_US = 86400 * US
+# Tables whose scans the workloads measure: each must be one row group, so
+# that a scan runs as one task whatever the writer's default group size.
+SINGLE_GROUP = ("lineitem", "events")
 
 
-def _ts(values, tz=None):
-    return pa.array(values, type=pa.timestamp("us", tz=tz))
-
-
-def _pick(choices, idx):
-    return pa.array(np.asarray(choices, dtype=object)[idx], pa.string())
-
-
-def _write(out, name, table):
-    path = os.path.join(out, f"{name}.parquet")
-    tmp = path + ".tmp"
-    # One row group per table: a single-row-group file scans as one task.
-    pq.write_table(table, tmp, row_group_size=max(table.num_rows, 1))
-    os.replace(tmp, path)
-
-
-def generate(out, sf):
-    """Write the base tables at scale factor `sf` into `out`, deterministically."""
-    os.makedirs(out, exist_ok=True)
-    rng = np.random.default_rng(BASE_SEED)
-    scale = sf / 0.001
-    n_nation = 25
-    n_supplier = int(10 * scale)
-    n_customer = int(150 * scale)
-    n_part = int(200 * scale)
-    n_orders = int(1500 * scale)
-    n_lineitem = int(6000 * scale)
-    n_events = int(1000 * scale)
-    n_docs = int(500 * scale)
-
-    # Dimension draws keep the stream aligned with the engine's fixture
-    # generator; the dimension tables themselves are not needed here.
-    rng.integers(0, n_nation, n_supplier)
-    rng.uniform(-999, 9999, n_supplier)
-    rng.integers(0, n_nation, n_customer)
-    rng.uniform(-999, 9999, n_customer)
-    rng.integers(0, SEGMENTS, n_customer)
-    rng.integers(0, PTYPES, n_part)
-    rng.integers(1, 51, n_part)
-    rng.uniform(900, 2100, n_part)
-
-    o_date0 = np.datetime64("1995-01-01", "us").astype("int64")
-    o_days = int((np.datetime64("2001-11-01", "D") - np.datetime64("1995-01-01", "D"))
-                 .astype("int64"))
-    orderdates = o_date0 + rng.integers(0, o_days, n_orders) * DAY_US
-    _write(out, "orders", pa.table({
-        "o_orderkey": pa.array(np.arange(1, n_orders + 1), pa.int64()),
-        "o_custkey": pa.array(rng.integers(1, n_customer + 1, n_orders), pa.int64()),
-        "o_orderstatus": _pick(["F", "O", "P"], rng.integers(0, 3, n_orders)),
-        "o_totalprice": np.round(rng.uniform(1000, 400000, n_orders), 2),
-        "o_orderdate": _ts(orderdates),
-        "o_orderpriority": _pick(PRIORITIES, rng.integers(0, 5, n_orders))}))
-
-    li_order = rng.integers(1, n_orders + 1, n_lineitem)
-    shipdates = orderdates[li_order - 1] + rng.integers(1, 120, n_lineitem) * DAY_US
-    _write(out, "lineitem", pa.table({
-        "l_orderkey": pa.array(li_order, pa.int64()),
-        "l_partkey": pa.array(rng.integers(1, n_part + 1, n_lineitem), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(1, n_supplier + 1, n_lineitem), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, n_lineitem), pa.int32()),
-        "l_quantity": np.round(rng.uniform(1, 50, n_lineitem), 0),
-        "l_extendedprice": np.round(rng.uniform(900, 100000, n_lineitem), 2),
-        "l_discount": np.round(rng.uniform(0, 0.1, n_lineitem), 2),
-        "l_tax": np.round(rng.uniform(0, 0.08, n_lineitem), 2),
-        "l_returnflag": _pick(["A", "N", "R"], rng.integers(0, 3, n_lineitem)),
-        "l_linestatus": _pick(["F", "O"], rng.integers(0, 2, n_lineitem)),
-        "l_shipdate": _ts(shipdates)}))
-
-    ev_t0 = np.datetime64("2024-01-01", "us").astype("int64")
-    ev_ts = np.sort(ev_t0 + rng.integers(0, 30 * DAY_US, n_events))
-    _write(out, "events", pa.table({
-        "event_id": pa.array(np.arange(n_events), pa.int64()),
-        "ts": _ts(ev_ts),
-        "user_id": pa.array(rng.integers(0, n_events // 10, n_events), pa.int64()),
-        "event_type": _pick(EVENT_TYPES, rng.integers(0, 5, n_events)),
-        "value": np.round(rng.uniform(0, 500, n_events), 4),
-        "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, n_events)]}))
-
-    texts = []
-    for i in range(n_docs):
-        n_words = int(rng.integers(8, 120))
-        words = rng.integers(0, len(WORDS), n_words)
-        if i % 20 == 0 and i > 0:  # exact duplicates for the dedup queries
-            texts.append(texts[i - 1])
-        else:
-            texts.append(" ".join(WORDS[j] for j in words))
-    _write(out, "documents", pa.table({
-        "doc_id": pa.array(np.arange(n_docs), pa.int64()),
-        "text": pa.array(texts, pa.string()),
-        "lang": _pick(LANGS, rng.integers(0, 5, n_docs)),
-        "source": pa.array([f"src{i}" for i in rng.integers(0, 20, n_docs)], pa.string()),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64())}))
-
-
-def ensure_base(root, sf):
-    """Return the base-table directory for `sf` under `root`, generating it once."""
-    out = os.path.join(root, f"fixtures-{VERSION}-sf{sf}")
+def ensure_base(root, repo, sf):
+    """Return the base-table directory for `sf` under `root`, generating it
+    once with `repo`/tools/gen_testdata.py."""
+    gen = os.path.join(repo, "tools", "gen_testdata.py")
+    with open(gen, "rb") as fh:
+        version = hashlib.sha256(fh.read()).hexdigest()[:12]
+    out = os.path.join(root, f"fixtures-{version}-sf{sf}")
     done = os.path.join(out, "DONE")
-    if not os.path.exists(done):
-        generate(out, sf)
-        with open(done, "w") as f:
-            f.write(VERSION + "\n")
+    if os.path.exists(done):
+        return out
+    shutil.rmtree(out, ignore_errors=True)
+    subprocess.run([sys.executable, gen, out, str(sf)], check=True,
+                   stdout=subprocess.DEVNULL, timeout=600)
+    for name in SINGLE_GROUP:
+        path = os.path.join(out, f"{name}.parquet")
+        if pq.ParquetFile(path).metadata.num_row_groups != 1:
+            t = pq.read_table(path)
+            pq.write_table(t, path + ".tmp", row_group_size=max(t.num_rows, 1))
+            os.replace(path + ".tmp", path)
+    with open(done, "w") as fh:
+        fh.write(version + "\n")
     return out
 
 

@@ -16,7 +16,7 @@ import graft.pipeline.RunStats
   *
   * Set-up (session start, fixture staging, warm-up) runs first and ends
   * at `ready_ms`. Then whole passes over the workload's fixed operation
-  * sequence run back to back (closed loop, one caller) for `--seconds`.
+  * sequence run back to back (closed loop, one caller) for about `--seconds`.
   * With `--trace 1`, untraced passes alternate with traced ones (spans and
   * a SparkListener), followed by standalone timings of the layers that
   * otherwise run only inside `Transfer.run`.
@@ -27,13 +27,12 @@ object Main {
 
   final case class Args(workload: String, seconds: Double, trace: Boolean,
       fixtures: String, work: String, out: String, cores: Int,
-      cronStartHour: Int, cronMaxTicks: Int, queryOrder: Seq[String])
+      cronStartHour: Int, queryOrder: Seq[String])
 
   private def parse(argv: Array[String]): Args = {
     val m = argv.grouped(2).map { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     Args(m("workload"), m("seconds").toDouble, m("trace") == "1", m("fixtures"),
       m("work"), m("out"), m("cores").toInt, m.getOrElse("cron-start-hour", "0").toInt,
-      m.getOrElse("cron-max-ticks", "400").toInt,
       m.getOrElse("query-order", "").split(",").toSeq.filter(_.nonEmpty))
   }
 
@@ -195,23 +194,20 @@ object Main {
     require(failedWarm.isEmpty, s"warm-up failed: ${failedWarm.map(_("error")).mkString("; ")}")
     val readyMs = System.currentTimeMillis()
 
-    // Measured passes (closed loop). A pass starts only if the previous
-    // one's length still fits in `--seconds`, so a run never overshoots by
-    // a whole pass; at least one pass (two when traced: untraced and traced
-    // passes alternate, so the tracing overhead is not confounded with
-    // warm-up drift).
+    // Measured passes (closed loop): as many as fill `--seconds` at the
+    // workload's nominal pass time, at least three, so that per-pass figures
+    // are medians. The count does not depend on how fast this run goes: cron
+    // tick latency keeps falling for ~60 ticks, so a loop bounded by time
+    // would give a fast run more, and more warmed, passes and widen the
+    // spread between runs. When traced, untraced and traced passes
+    // alternate, so the tracing overhead is not confounded with warm-up drift.
     val standalone = ArrayBuffer.empty[(String, Any)]
-    val t0 = System.nanoTime()
+    val nPasses = math.max(3, math.round(a.seconds / wl.nominalPassS).toInt)
     var p = 0
-    var last = 0.0
-    val minPasses = if (a.trace) 2 else 1
-    while (wl.hasPass(p) &&
-        (p < minPasses || (System.nanoTime() - t0) / 1e9 + last <= a.seconds)) {
+    while (p < nPasses && wl.hasPass(p)) {
       val traced = a.trace && p % 2 == 1
       if (traced) { sc.addSparkListener(engine); tracer.enabled = true }
-      val s0 = System.nanoTime()
       runPass(if (traced) "traced" else "untraced", p, wl.pass(p))
-      last = (System.nanoTime() - s0) / 1e9
       if (traced) { PerfbenchBus.drain(sc); tracer.enabled = false; sc.removeSparkListener(engine) }
       p += 1
     }

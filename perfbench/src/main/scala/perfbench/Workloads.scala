@@ -17,6 +17,9 @@ import Main.{Args, Op}
 abstract class Workload(a: Args, spark: SparkSession, tracer: Tracer) {
   def warmUp: Seq[Seq[Op]]
   def pass(p: Int): Seq[Op]
+  /** Typical seconds of one warm pass on a 4-core VM; sets the number of
+    * measured passes for a given `--seconds`. */
+  def nominalPassS: Double
   def hasPass(p: Int): Boolean = true
   def meta: Map[String, Any] = Map.empty
   def standalone(plans: PlanListener): Seq[(String, Any)] = Seq.empty
@@ -95,6 +98,7 @@ final class BulkLoad(a: Args, spark: SparkSession, tracer: Tracer)
   }
   def warmUp: Seq[Seq[Op]] = Seq(Seq(op()))
   def pass(p: Int): Seq[Op] = Seq(op())
+  def nominalPassS: Double = 4.5
   override def standalone(plans: PlanListener): Seq[(String, Any)] =
     Seq("pipeline.plan_ms" -> planMs(Transfer.plan(source, cfg)))
 }
@@ -121,6 +125,7 @@ final class IncrementalRerun(a: Args, spark: SparkSession, tracer: Tracer)
   }
   def warmUp: Seq[Seq[Op]] = Seq(Seq(op()))
   def pass(p: Int): Seq[Op] = Seq(op())
+  def nominalPassS: Double = 8.5
   override def standalone(plans: PlanListener): Seq[(String, Any)] = {
     val seedTarget = files(s"${a.work}/seed", "parquet")
     Seq("pipeline.plan_ms" -> planMs(Transfer.plan(source, cfg))) ++
@@ -136,7 +141,7 @@ final class CronTicks(a: Args, spark: SparkSession, tracer: Tracer)
   // and executor paths (0.9 s at tick 10, 0.8 s at 20, 0.65 s at 60 on a
   // 4-core VM); 20 warm-up ticks reach the slow tail of that curve.
   val warmTicks = 20
-  val passTicks = 10
+  val passTicks = 5
   private val t0 = LocalDateTime.of(2024, 1, 1, 0, 0)
   private val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
   private val root = s"${a.work}/cron"
@@ -168,7 +173,9 @@ final class CronTicks(a: Args, spark: SparkSession, tracer: Tracer)
   }
   def warmUp: Seq[Seq[Op]] = Seq(Seq.fill(warmTicks)(op()))
   def pass(p: Int): Seq[Op] = Seq.fill(passTicks)(op())
-  override def hasPass(p: Int): Boolean = tick + passTicks <= a.cronMaxTicks
+  def nominalPassS: Double = 3.6
+  // The events span 30 days; a pass runs only if its last window fits.
+  override def hasPass(p: Int): Boolean = a.cronStartHour + tick + passTicks + 1 <= 30 * 24
   override def meta: Map[String, Any] = Map("ticks" -> tick, "warm_ticks" -> warmTicks,
     "pass_ticks" -> passTicks)
   override def standalone(plans: PlanListener): Seq[(String, Any)] = {
@@ -182,8 +189,8 @@ final class CronTicks(a: Args, spark: SparkSession, tracer: Tracer)
 
 /** Twelve SparkEntry queries, each written to a noop sink. The first
   * warm-up pass writes every result as parquet instead, for the oracle
-  * check; two more warm-up passes bring a pass within ~10% of its plateau
-  * (6.6 s right after the first, 5.7 s after three, 5.0 s after four). */
+  * check; it takes ~22 s, the next pass ~7 s and later ones ~6 s on a
+  * 4-core VM, so one more warm-up pass reaches that plateau. */
 final class QueryMix(a: Args, spark: SparkSession, tracer: Tracer)
     extends Workload(a, spark, tracer) {
   private val queries = graft.SparkEntry.queries
@@ -191,9 +198,10 @@ final class QueryMix(a: Args, spark: SparkSession, tracer: Tracer)
   private def op(name: String, write: DataFrame => Unit): Op =
     Op("queries.run", name, () => { write(queries(name)(spark, a.fixtures)); None })
   def warmUp: Seq[Seq[Op]] = a.queryOrder.map(n =>
-    op(n, _.write.mode("overwrite").parquet(s"${a.work}/qcheck/$n"))) +: Seq(pass(0), pass(0))
+    op(n, _.write.mode("overwrite").parquet(s"${a.work}/qcheck/$n"))) +: Seq(pass(0))
   def pass(p: Int): Seq[Op] = a.queryOrder.map(n =>
     op(n, _.write.format("noop").mode("overwrite").save()))
+  def nominalPassS: Double = 6.0
   override def meta: Map[String, Any] =
     Map("oracle_sql" -> a.queryOrder.map(n => n -> oracle.getOrElse(n, null)).toMap)
 }
