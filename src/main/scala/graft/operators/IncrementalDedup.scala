@@ -18,23 +18,36 @@ import graft.functions.RowHash
   * small (which IS the reference's ship-the-set design) and falls back to a
   * shuffled hash / sort-merge join when it isn't — removing the RAM cliff at
   * 100 TB. Nothing is ever collect()ed to the driver.
+  *
+  * Build side: [[hashes]] or [[snapshot]]. A left-anti join keeps a source
+  * row iff its key has no match, so duplicate build keys cannot change the
+  * result — feed [[filter]] with [[hashes]], which skips the aggregation
+  * (one shuffle stage) that `distinct()` costs. Use [[snapshot]] only where
+  * the hash SET itself is the output: shipped, stored, counted or compared.
   */
 object IncrementalDedup {
 
   private val H = "__graft_row_hash"
 
+  /** Row hash of every row of `target` (restricted to `fields` when given),
+    * duplicates kept — the build side for [[filter]].
+    */
+  def hashes(target: DataFrame, fields: Seq[String] = Seq.empty): DataFrame = {
+    val t = if (fields.isEmpty) target else target.select(fields.map(col): _*)
+    t.select(RowHash.ofAllColumns(t).as(H))
+  }
+
   /** A2 `GetSnapshot`: distinct row-hash set of the target window
     * (`consumer.go:88-97` — duplicate hashes collapse into a set).
     */
-  def snapshot(target: DataFrame, fields: Seq[String] = Seq.empty): DataFrame = {
-    val t = if (fields.isEmpty) target else target.select(fields.map(col): _*)
-    t.select(RowHash.ofAllColumns(t).as(H)).distinct()
-  }
+  def snapshot(target: DataFrame, fields: Seq[String] = Seq.empty): DataFrame =
+    hashes(target, fields).distinct()
 
-  /** P3/J1 `filter`: drop source rows whose row hash appears in the snapshot.
-    * An empty snapshot passes everything through (`etl.go:29-31`); a full
-    * match yields an empty result (the reference skips the batch,
-    * `etl.go:40-42` — an empty DataFrame is the same thing).
+  /** P3/J1 `filter`: drop source rows whose row hash appears in
+    * `snapshotHashes` (a [[hashes]] or [[snapshot]] frame). An empty
+    * snapshot passes everything through (`etl.go:29-31`); a full match
+    * yields an empty result (the reference skips the batch, `etl.go:40-42`
+    * — an empty DataFrame is the same thing).
     */
   def filter(source: DataFrame, snapshotHashes: DataFrame): DataFrame = {
     val hashed = source.withColumn(H, RowHash.ofAllColumns(source))

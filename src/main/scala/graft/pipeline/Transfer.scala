@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.operators.IncrementalDedup
 import graft.sources.Connector
@@ -52,10 +55,13 @@ final case class RunStats(
   * Scale notes (100 TB):
   *   - projection + window predicate are applied before any wide op, so
   *     Catalyst pushes them into the scan (PushedFilters / ReadSchema);
-  *   - the dedup anti-join is the only shuffle, and AQE may demote it to a
-  *     broadcast join when the snapshot window is small;
-  *   - row counts come from DataFrame-level counts on the already-narrow
-  *     plans, never from collect().
+  *   - the dedup anti-join's build side is the target window's raw row
+  *     hashes (no `distinct()`, so no aggregation shuffle); AQE/Catalyst
+  *     broadcast it when the window is small and shuffle-join otherwise;
+  *   - a run is ONE Spark action, the sink write: the source is scanned
+  *     once, nothing is cached, and the row counts are observed metrics
+  *     (`Dataset.observe`) computed by that same write job, never by a
+  *     separate count() or collect().
   */
 object Transfer {
 
@@ -83,12 +89,21 @@ object Transfer {
     df
   }
 
+  /** How long [[run]] waits, after the sink's write returns, for the
+    * write job's observed row counts to arrive. They travel on Spark's
+    * listener bus, normally within milliseconds; a connector whose `write`
+    * never executes the plan it was given would otherwise block forever.
+    */
+  private val ObservedCountsTimeout: FiniteDuration = 30.seconds
+
   /** Run one transfer; returns the reference-parity accounting. */
   def run(source: Connector, sink: Connector, cfg: Config): RunStats = {
     val t0 = System.nanoTime()
-    val src = plan(source, cfg)
+    val readObs = Observation("graft_rows_read")
+    val writtenObs = Observation("graft_rows_written")
+    val src = plan(source, cfg).observe(readObs, count(lit(1)).as("rows"))
 
-    val toWrite =
+    val deduped =
       if (!cfg.increment) src
       else {
         // Snapshot the SAME window/field list on the target so hashes align
@@ -104,25 +119,36 @@ object Transfer {
             if (tgt.columns.contains(w.column)) tgt = tgt.where(w.predicate)
           }
           if (cfg.fields.nonEmpty) tgt = tgt.select(cfg.fields.map(col): _*)
-          IncrementalDedup.filter(src, IncrementalDedup.snapshot(tgt))
+          IncrementalDedup.filter(src, IncrementalDedup.hashes(tgt))
         }
       }
 
-    // One pass for the write; counts computed on cached narrow plans.
-    // The source count runs BEFORE the write: if source and target
-    // overlap (self-append) or the source is concurrently mutated,
-    // accounting must reflect the rows this run actually saw, not the
-    // post-write state (rowsFiltered would otherwise go negative).
-    val cached = toWrite.cache()
-    val written = cached.count()
-    val read = src.count()
-    sink.write(cached, cfg.target, cfg.mode)
-    cached.unpersist()
+    // The write is the run's only action. Both counts are observed by the
+    // job that performs it, so they describe exactly the rows this run
+    // scanned and wrote — a self-append or a concurrently mutated source
+    // cannot skew them (rowsFiltered never goes negative).
+    sink.write(deduped.observe(writtenObs, count(lit(1)).as("rows")), cfg.target, cfg.mode)
+    val read = observedCount(readObs, sink)
+    val written = observedCount(writtenObs, sink)
     RunStats(
       rowsRead = read,
       rowsFiltered = read - written,
       rowsWritten = written,
       durationMs = (System.nanoTime() - t0) / 1000000,
     )
+  }
+
+  private def observedCount(obs: Observation, sink: Connector): Long = {
+    val row =
+      try Await.result(obs.future, ObservedCountsTimeout)
+      catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          s"${sink.getClass.getName}.write returned without executing the " +
+            s"plan it was given: no '${obs.name}' count after $ObservedCountsTimeout")
+      }
+    // AQE drops a subtree that materialized empty (an empty probe side of
+    // a shuffled anti-join) from the final plan; an observation inside it
+    // then completes with an empty row, and its count is zero.
+    if (row.length == 0) 0L else row.getAs[Long]("rows")
   }
 }

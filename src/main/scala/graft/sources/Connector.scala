@@ -12,7 +12,9 @@ trait Connector {
     * mirroring the reference's per-query schema discovery, §1.2). */
   def read(table: String): DataFrame
 
-  /** Append rows to a target table (the reference's bulk INSERT, §2.8). */
+  /** Append rows to a target table (the reference's bulk INSERT, §2.8).
+    * Must execute `df` itself: `Transfer.run` takes its row counts from
+    * that execution. */
   def write(df: DataFrame, target: String, mode: SaveMode = SaveMode.Append): Unit
 }
 

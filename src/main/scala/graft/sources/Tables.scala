@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -68,9 +69,6 @@ object Tables {
     } finally reader.close()
   }
 
-  /** Load `dir/name.parquet` with every timestamp encoding (NANOS-as-long,
-    * NTZ-micros, LTZ-micros) normalized to session-TZ TimestampType.
-    */
   // Footer-sniff memo: nanosTimestampCols opens and parses the parquet
   // footer ON THE DRIVER per call, and every query calls load() 1-5
   // times per construction — tens of ms of serial driver latency per
@@ -84,24 +82,53 @@ object Tables {
   // listing plus a 1-task schema-inference JOB per spark.read.parquet
   // call — measured ~20-40 ms of serial driver latency each, and every
   // query construction calls load() 1-5 times, EVERY run. The resolved
-  // logical plan is immutable session-scoped METADATA (schema + file
-  // index), exactly what a catalog table caches; the parquet DATA is
-  // re-scanned by every action, so no result ever persists across runs.
-  // Keyed per (session, path): Bench/Verify each hold one session.
-  private val dfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // logical plan is session-scoped METADATA (schema + file index), exactly
+  // what a catalog table caches; the parquet DATA is re-scanned by every
+  // action, so no result ever persists across runs. Keyed per (session,
+  // path): Bench/Verify each hold one session.
+  //
+  // The file index inside a memoized plan is frozen at the listing it was
+  // built from, so each entry carries that listing's signature (every
+  // file's path, length and mtime). load() re-lists the path (file-system
+  // metadata calls only, no job) and rebuilds the entry when the signature
+  // has changed: a sink target appended to between two reads must show
+  // the new files. An unchanged fixture keeps its entry.
+  private val dfMemo = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), (Seq[(String, Long, Long)], DataFrame)]()
 
+  /** (path, length, mtime) of every file under `path`, sorted; empty when
+    * the path does not exist (the read then fails as it would unmemoized).
+    * Walks with listStatus: the local file system's recursive listFiles
+    * also resolves block locations, ~100x slower on a single file.
+    */
+  private def listing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(f: FileStatus): Seq[(String, Long, Long)] =
+      if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(walk)
+      else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+    try walk(fs.getFileStatus(p)).sorted
+    catch { case _: FileNotFoundException => Seq.empty }
+  }
+
+  /** Load `dir/name.parquet` with every timestamp encoding (NANOS-as-long,
+    * NTZ-micros, LTZ-micros) normalized to session-TZ TimestampType.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    dfMemo.computeIfAbsent((spark, path), { _ =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(path)
-      val nanosCols = nanosColsMemo.computeIfAbsent(path,
-        p => nanosTimestampCols(spark, p))
-      normalizeNtz(nanosCols.foldLeft(df) { (d, c) =>
-        d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
-      })
-    })
+    val files = listing(spark, path)
+    dfMemo.compute((spark, path), { (_, memo) =>
+      if (memo != null && memo._1 == files) memo
+      else {
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val df = spark.read.parquet(path)
+        val nanosCols = nanosColsMemo.computeIfAbsent(path,
+          p => nanosTimestampCols(spark, p))
+        (files, normalizeNtz(nanosCols.foldLeft(df) { (d, c) =>
+          d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
+        }))
+      }
+    })._2
   }
 
   /** Guard for CPU-bound narrow transforms (shingling, fingerprinting,
