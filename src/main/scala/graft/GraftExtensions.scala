@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expressions.{FloatVecDot, RowHashMd5, SortedLongIntersectCount, SortedLongJaccardGE}
-import graft.plans.{RegexPrefixRewrite, TopKStrategy}
+import graft.plans.{RegexPrefixRewrite, ScanFilterParamStrategy, TopKStrategy}
 
 /** Session wiring for graft's custom Catalyst pieces, so SQL users get
   * them too:
@@ -14,7 +14,10 @@ import graft.plans.{RegexPrefixRewrite, TopKStrategy}
   *   - `graft.GraftExtensions.register(spark)` at runtime on an existing
   *     session (what the library entry points use).
   *
-  * Registers the TopKPerKey planner strategy and the SQL functions
+  * Registers the TopKPerKey and scan-filter-parameter planner strategies
+  * (the latter keeps file-scan filter constants out of generated code,
+  * so a plan re-run with new bounds reuses its compiled classes), the
+  * regex-rewrite optimizer rule and the SQL functions
   * enumerated in [[GraftExtensions.functions]] — that Seq is the single
   * source of truth; currently `graft_row_hash(cells…)`,
   * `float_vec_dot(a, b)`, `sorted_long_intersect_count(a, b)`,
@@ -23,7 +26,7 @@ import graft.plans.{RegexPrefixRewrite, TopKStrategy}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => TopKStrategy)
+    GraftExtensions.strategies.foreach(s => e.injectPlannerStrategy(_ => s))
     e.injectOptimizerRule(_ => RegexPrefixRewrite)
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
@@ -74,12 +77,14 @@ object GraftExtensions {
       }),
   )
 
-  /** Attach the TopK planner strategy to a live session (idempotent). */
-  def ensureStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
+  private val strategies = Seq(TopKStrategy, ScanFilterParamStrategy)
+
+  /** Attach graft's planner strategies to a live session (idempotent). */
+  def ensureStrategy(spark: SparkSession): Unit = {
+    val missing = strategies.filterNot(spark.experimental.extraStrategies.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
+  }
 
   /** Attach the regex-rewrite optimizer rule to a live session
     * (idempotent — `extraOptimizations` is the runtime counterpart of

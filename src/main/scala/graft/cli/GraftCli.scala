@@ -164,6 +164,7 @@ object GraftCli {
       .config("spark.sql.shuffle.partitions", math.max(c.workers, 1))
       .config("spark.sql.session.timeZone", "UTC")
       .appName("graft-transfer").getOrCreate()
+    graft.GraftExtensions.register(spark)
     if (c.once) {
       val stats = runOnce(spark, c)
       println(s"RUN: $stats")

@@ -50,8 +50,16 @@ final class ScheduledRunner private (
   private val running = new AtomicBoolean(false)
   @volatile private var lastStats: Option[RunStats] = None
   @volatile private var stopped = false
+  private var counts = ScheduledRunner.TickCounts(0, 0, 0)
+  @volatile private var lastFail: Option[ScheduledRunner.Failure] = None
 
   def last: Option[RunStats] = lastStats
+
+  /** Scheduled fires so far, by outcome. */
+  def tickCounts: ScheduledRunner.TickCounts = synchronized(counts)
+
+  /** The most recent scheduled fire that failed, with its cause. */
+  def lastFailure: Option[ScheduledRunner.Failure] = lastFail
 
   /** Run one tick immediately (the reference's per-cron-tick `p.start`). */
   def tick(): RunStats = {
@@ -62,16 +70,25 @@ final class ScheduledRunner private (
   }
 
   /** Overlap guard: runs `tick` unless a previous run is still in
-    * flight; returns false when skipped.
+    * flight; returns false when skipped. Every fire is counted in
+    * [[tickCounts]]; a failure is also kept in [[lastFailure]].
     */
   private[pipeline] def guardedTick(): Boolean =
     if (running.compareAndSet(false, true)) {
-      try { tick(); true }
+      try { tick(); count(c => c.copy(ok = c.ok + 1)) }
       catch { case e: Throwable =>
         System.err.println(s"[graft-scheduler] run failed: ${e.getMessage}")
-        true // the RUN happened (and failed); it was not skipped
+        lastFail = Some(ScheduledRunner.Failure(clock.instant(), e))
+        count(c => c.copy(failed = c.failed + 1))
       } finally running.set(false)
-    } else false
+      true // the RUN happened (and may have failed); it was not skipped
+    } else {
+      count(c => c.copy(skipped = c.skipped + 1))
+      false
+    }
+
+  private def count(f: ScheduledRunner.TickCounts => ScheduledRunner.TickCounts): Unit =
+    synchronized { counts = f(counts) }
 
   private[graft] def guardedTickForTest(): Boolean = guardedTick()
 
@@ -103,6 +120,13 @@ final class ScheduledRunner private (
 }
 
 object ScheduledRunner {
+  /** Scheduled fires that ran to completion, failed, or were skipped
+    * because the previous run was still in flight. */
+  final case class TickCounts(ok: Long, failed: Long, skipped: Long)
+
+  /** A failed fire: when it ended and why. */
+  final case class Failure(at: Instant, cause: Throwable)
+
   /** Test seam: a runner with injectable work, schedule and clock. */
   private[graft] def forTest(runFn: () => RunStats, schedule: Schedule,
       onRun: RunStats => Unit = _ => (),

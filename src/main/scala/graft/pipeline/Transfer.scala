@@ -3,6 +3,7 @@ package graft.pipeline
 import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.operators.IncrementalDedup
@@ -61,7 +62,16 @@ final case class RunStats(
   *   - a run is ONE Spark action, the sink write: the source is scanned
   *     once, nothing is cached, and the row counts are observed metrics
   *     (`Dataset.observe`) computed by that same write job, never by a
-  *     separate count() or collect().
+  *     separate count() or collect();
+  *   - a scheduled tick re-plans the same query with new window bounds.
+  *     On a session with `GraftExtensions` registered, the bounds reach
+  *     the scans' generated filter code as parameters
+  *     (`ScanFilterParamStrategy`), so every tick after the first reuses
+  *     the compiled classes, while `PushedFilters` keep the real bounds;
+  *   - a parquet target that only grew since the last tick is re-read
+  *     with the schema `Tables.load` already holds: no inference job, so
+  *     a tick is two jobs, the broadcast of the target hashes and the
+  *     write.
   */
 object Transfer {
 
@@ -111,10 +121,15 @@ object Transfer {
         // contain the cursor column (only `fields` were ever written); then
         // the window is skipped and the snapshot covers the whole target —
         // a superset of hashes, still correct for dedup (the reference
-        // would error on the missing column instead).
-        var tgt = scala.util.Try(sink.read(cfg.target)).getOrElse(null)
-        if (tgt == null) src
-        else {
+        // would error on the missing column instead). Only a target that
+        // does not exist is an empty snapshot: one that exists but fails
+        // to read fails the run, as skipping dedup would append the
+        // window again.
+        val target =
+          try Some(sink.read(cfg.target))
+          catch { case NonFatal(_) if !sink.exists(cfg.target) => None }
+        target.fold(src) { t =>
+          var tgt = t
           cfg.window.foreach { w =>
             if (tgt.columns.contains(w.column)) tgt = tgt.where(w.predicate)
           }

@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
+import org.apache.spark.sql.jdbc.JdbcDialects
 
 /** S1: the reference's universal storage connection (`/root/reference/etl.go:12-14`)
   * — one interface both reads batches and executes writes. In Spark the two
@@ -16,6 +19,20 @@ trait Connector {
     * Must execute `df` itself: `Transfer.run` takes its row counts from
     * that execution. */
   def write(df: DataFrame, target: String, mode: SaveMode = SaveMode.Append): Unit
+
+  /** Whether `table` exists. An incremental run asks this only after its
+    * target failed to read: a missing target is an empty snapshot, any
+    * other read failure fails the run (it must never skip dedup). The
+    * default reads again and counts only a not-found error as absence;
+    * connectors that can ask their storage directly override it.
+    */
+  def exists(table: String): Boolean =
+    try { read(table); true }
+    catch { case e: AnalysisException if Connector.NotFound(e.getCondition) => false }
+}
+
+object Connector {
+  private val NotFound = Set("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND")
 }
 
 /** File-based connector (parquet/csv/json directories) — used for the
@@ -33,6 +50,12 @@ final class FileConnector(spark: SparkSession, root: String, format: String = "p
       .option("inferSchema", "true").csv(path(table))
     case "json"    => spark.read.json(path(table))
     case other     => spark.read.format(other).load(path(table))
+  }
+
+  /** One file-system metadata call; no job. */
+  override def exists(table: String): Boolean = {
+    val p = new Path(path(table))
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
   def write(df: DataFrame, target: String, mode: SaveMode = SaveMode.Append): Unit = format match {
@@ -113,6 +136,16 @@ final class JdbcConnector(
     * text to the source.
     */
   def readQuery(query: String): DataFrame = base.option("query", query).load()
+
+  /** Spark's own probe (`SELECT 1 FROM t WHERE 1=0` or the dialect's),
+    * on one driver-side connection; no job. A connection that cannot be
+    * opened throws. */
+  override def exists(table: String): Boolean = {
+    val opts = new JdbcOptionsInWrite(Map("url" -> url, "dbtable" -> table) ++
+      (if (user.nonEmpty) Map("user" -> user, "password" -> password) else Map.empty))
+    val conn = JdbcDialects.get(url).createConnectionFactory(opts)(-1)
+    try JdbcUtils.tableExists(conn, opts) finally conn.close()
+  }
 
   def write(df: DataFrame, target: String, mode: SaveMode = SaveMode.Append): Unit = {
     var w = df.write.format("jdbc").mode(mode)

@@ -80,6 +80,24 @@ class ScheduledRunnerSpec extends SparkSpec {
     assert(runs == 1)
     // after the in-flight run finishes, ticks run again
     assert(runner.guardedTickForTest() && runs == 2)
+    assert(runner.tickCounts == ScheduledRunner.TickCounts(ok = 2, failed = 0, skipped = 1))
+    runner.stop()
+  }
+
+  test("every scheduled fire is counted; a failure keeps its cause") {
+    val clock = Clock.fixed(at("2026-08-12T13:45:00Z"), utc)
+    var fail = true
+    val runner = ScheduledRunner.forTest(() =>
+      if (fail) throw new IllegalStateException("target unreadable") else RunStats(1, 0, 1, 0),
+      Schedule.parse("@every 1h"), clock = clock)
+    assert(runner.guardedTickForTest())
+    fail = false
+    assert(runner.guardedTickForTest())
+    assert(runner.tickCounts == ScheduledRunner.TickCounts(ok = 1, failed = 1, skipped = 0))
+    val failure = runner.lastFailure.get
+    assert(failure.at == clock.instant())
+    assert(failure.cause.getMessage == "target unreadable")
+    assert(runner.last.contains(RunStats(1, 0, 1, 0)))
     runner.stop()
   }
 

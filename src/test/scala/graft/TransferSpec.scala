@@ -1,18 +1,29 @@
 package graft
 
+import java.io.IOException
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
+import graft.operators.IncrementalDedup
 import graft.pipeline.{Transfer, Window}
+import graft.plans.ParamLiteral
 import graft.sources.{Connector, FileConnector, JdbcConnector}
 
 /** A sink whose `write` returns without executing the plan. */
 private final class DiscardingConnector extends Connector {
   def read(table: String): DataFrame = throw new NoSuchElementException(table)
   def write(df: DataFrame, target: String, mode: SaveMode): Unit = ()
+}
+
+/** A sink whose reads throw, as over a dropped connection, once
+  * `failing` is set; `exists` is the trait's default. */
+private final class FlakyReadConnector(inner: Connector) extends Connector {
+  @volatile var failing = false
+  def read(table: String): DataFrame =
+    if (failing) throw new IOException("connection reset") else inner.read(table)
+  def write(df: DataFrame, target: String, mode: SaveMode): Unit = inner.write(df, target, mode)
 }
 
 /** M1 end-to-end: the full reference pipeline semantics (scan → project →
@@ -120,24 +131,86 @@ class TransferSpec extends SparkSpec {
     Transfer.run(src, sink, incremental("jobs", tsWindow("2024-01-01", "2024-01-05")))
     spark.catalog.clearCache()
 
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    val stats =
-      try {
-        val s = Transfer.run(src, sink, incremental("jobs", tsWindow("2024-01-03", "2024-01-07")))
-        TestListenerBus.drain(sc)
-        s
-      } finally sc.removeSparkListener(listener)
+    val (stats, jobs) =
+      jobsOf(Transfer.run(src, sink, incremental("jobs", tsWindow("2024-01-03", "2024-01-07"))))
 
     assert(stats.rowsFiltered > 0 && stats.rowsWritten > 0)
-    assert(jobs.get <= 3, s"${jobs.get} jobs")
+    assert(jobs <= 3, s"$jobs jobs")
     assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty)
+  }
+
+  test("a target that exists but fails to read fails the run instead of appending again") {
+    val src = new FileConnector(spark, sf0001)
+    val sink = new FlakyReadConnector(
+      new FileConnector(spark, Files.createTempDirectory("graft-flaky").toString))
+    val cfg = incremental("flaky", tsWindow("2024-01-01", "2024-01-05"))
+    val first = Transfer.run(src, sink, cfg)
+    assert(first.rowsWritten > 0)
+    sink.failing = true
+    val e = intercept[IOException](Transfer.run(src, sink, cfg))
+    assert(e.getMessage == "connection reset")
+    sink.failing = false
+    assert(sink.read("flaky").count() == first.rowsWritten)
+  }
+
+  test("exists answers from storage without a Spark job, file and JDBC") {
+    val dir = Files.createTempDirectory("graft-exists").toString
+    for (c <- Seq(new FileConnector(spark, dir),
+        new JdbcConnector(spark, s"jdbc:derby:$dir/db;create=true"))) {
+      assert(jobsOf(c.exists("ex")) == ((false, 0)), c)
+      c.write(spark.range(3).toDF("id"), "ex")
+      assert(jobsOf(c.exists("ex")) == ((true, 0)), c)
+    }
+  }
+
+  /** A session with graft's extensions, so scan filters are parameterized. */
+  private def graftSession(): SparkSession = {
+    val s = spark.newSession()
+    GraftExtensions.register(s)
+    s
+  }
+
+  test("an incremental run over a new window compiles no new code") {
+    val s = graftSession()
+    val src = new FileConnector(s, sf0001)
+    val sink = new FileConnector(s, Files.createTempDirectory("graft-codegen").toString)
+    def run(from: String, to: String) =
+      Transfer.run(src, sink, incremental("cg", tsWindow(from, to)))
+    run("2024-01-01", "2024-01-05") // creates the target
+    run("2024-01-03", "2024-01-07") // warm: first plan with the dedup join
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val stats = run("2024-01-05", "2024-01-09")
+    assert(stats.rowsFiltered > 0 && stats.rowsWritten > 0)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles == 0)
+  }
+
+  test("both scans keep the window bounds in PushedFilters") {
+    val w = tsWindow("2024-01-03", "2024-01-07")
+    val cfg = incremental("pushed", w)
+    val dir = Files.createTempDirectory("graft-pushed").toString
+    new FileConnector(spark, dir).write(
+      Transfer.plan(new FileConnector(spark, sf0001), cfg), "pushed")
+    /** (scanned path, PushedFilters) of both scans, and the scan filters. */
+    def scans(s: SparkSession) = {
+      val tgt = new FileConnector(s, dir).read("pushed").where(w.predicate)
+      val df = IncrementalDedup.filter(Transfer.plan(new FileConnector(s, sf0001), cfg),
+        IncrementalDedup.hashes(tgt))
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      (ScanFilterParamSpec.collect(plan) { case f: FileSourceScanExec =>
+          (f.relation.location.rootPaths.mkString, f.metadata("PushedFilters")) }.sorted,
+        ScanFilterParamSpec.scanFilters(plan))
+    }
+    val (plain, _) = scans(spark.newSession())
+    val (pushed, filters) = scans(graftSession())
+    assert(pushed == plain)
+    assert(pushed.length == 2)
+    pushed.foreach { case (path, f) =>
+      assert(f.contains("2024-01-03") && f.contains("2024-01-07"), s"$path: $f")
+    }
+    assert(filters.length == 2)
+    filters.foreach(c => assert(c.collect { case p: ParamLiteral => p }.length == 2, c))
   }
 
   test("an empty source window counts zero, broadcast or shuffled dedup join") {
